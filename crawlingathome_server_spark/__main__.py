@@ -44,10 +44,10 @@ def main(argv: list[str] | None = None) -> int:
     )
     ap.add_argument(
         "--frontier-commit",
-        choices=["patch", "append", "rewrite"],
+        choices=["patch", "rewrite"],
         default="patch",
         help="jobs-mode frontier commit: patch = column-granular "
-        "merge-on-read layers (O(delta), default); append = bucket-delta; "
+        "merge-on-read layers (O(delta), default); "
         "rewrite = full-plan (the equivalence oracle)",
     )
     # crawl-mode engine features (r06/r07)

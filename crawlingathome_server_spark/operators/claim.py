@@ -44,6 +44,17 @@ from ..functions.urls import oracle_hash, seeded_hash64
 UNBOUNDED_BUDGET = 1 << 30
 
 
+def claim_is_single_scan(
+    robots: DataFrame | None, budget_col: str | None, default_budget: int
+) -> bool:
+    """True when :func:`claim_batch` takes its unbounded-literal shortcut:
+    no per-host budget source and a literal budget >= UNBOUNDED_BUDGET,
+    so every open candidate is claimed in one projection over one scan
+    — no rank window, no payload join-back. Callers that would pin the
+    candidate set for a multi-consumer claim plan gate on this."""
+    return robots is None and budget_col is None and default_budget >= UNBOUNDED_BUDGET
+
+
 def open_jobs(frontier: DataFrame, stage: str = "cpu") -> Column:
     """Boolean filter for claimable jobs (reference: main.py:386,607-609).
 
@@ -126,11 +137,7 @@ def claim_batch(
     """
     cand = frontier.filter(open_jobs(frontier, stage))
 
-    if (
-        robots is None
-        and budget_col is None
-        and default_budget >= UNBOUNDED_BUDGET
-    ):
+    if claim_is_single_scan(robots, budget_col, default_budget):
         # Unbounded literal budget (the crawl engine's "claim everything
         # polite" sentinel): `rn <= budget` is true for every row, so the
         # rank adds nothing — emit order_key/budget as plain projections.

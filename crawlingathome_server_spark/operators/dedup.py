@@ -3,21 +3,24 @@
 - exact: content-hash groupBy (one shuffle on a 16-byte key)
 - MinHash + LSH: shingle → minhash signature → band buckets → bucket join
   → candidate pairs → exact-Jaccard verify
-- SimHash: 64-bit near-dup fingerprint, hamming-distance candidates
+- SimHash: ≤64-bit near-dup fingerprint, hamming-distance candidates
 - n-gram Jaccard: exact pairwise similarity over a (bounded) candidate set
 - embedding cosine near-dup: see operators/similarity.py
 
-Scale notes: the LSH path is the 100 TB design — signatures are computed
-JVM-side in ONE fold over the shingle hashes (all n_hashes affine mins
-updated together; hash family: xxhash64 at-scale default, md5 for the
-SQL-oracle-verified variant, SipHash pandas as an independent
-cross-check), the band-bucket explode produces (n_bands × docs) rows
-that groupBy into buckets, and only same-bucket pairs are verified —
-with the shingle sets computed AFTER the candidate join, so only matched
-pairs get hashed. No pairwise cross join ever materializes beyond
-candidate buckets. Hot buckets (boilerplate docs) are capped with a
-per-bucket limit — the same skew-bounding move as the claim operator's
-salt phase.
+Each sketch has ONE kernel shape: the JVM hashes (shingles or words,
+whole-stage codegen) and one vectorized numpy pass per Arrow batch does
+the per-doc arithmetic (affine mins / bit votes). Two hash families:
+xxhash64, the at-scale default, and md5, whose every stage the DuckDB
+oracle (oracles.py) reproduces bit for bit — that oracle is the
+independent reference.
+
+Scale notes: the LSH path is the 100 TB design — the band-bucket
+explode produces (n_bands × docs) rows that groupBy into buckets, and
+only same-bucket pairs are verified — with the shingle sets computed
+AFTER the candidate join, so only matched pairs get hashed. No pairwise
+cross join ever materializes beyond candidate buckets. Hot buckets
+(boilerplate docs) are capped with a per-bucket limit — the same
+skew-bounding move as the claim operator's salt phase.
 """
 
 from __future__ import annotations
@@ -42,46 +45,6 @@ def _perm_params(n_hashes: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
     a = rng.randint(1, _MERSENNE, size=n_hashes, dtype=np.int64)
     b = rng.randint(0, _MERSENNE, size=n_hashes, dtype=np.int64)
     return a, b
-
-
-def _shingle_hashes(text: str, k: int) -> np.ndarray:
-    """uint64 hashes of the k-word shingles. Hashing is C-level
-    (pd.util.hash_array SipHash, deterministic for a fixed hash_key) —
-    no per-character Python."""
-    words = text.split()
-    if len(words) < k:
-        shingles = [" ".join(words)] if words else [""]
-    else:
-        shingles = [" ".join(words[i : i + k]) for i in range(len(words) - k + 1)]
-    return pd.util.hash_array(np.asarray(shingles, dtype=object), hash_key="0123456789123456")
-
-
-def minhash_signatures(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_hashes: int = 64,
-    shingle_k: int = 3,
-    seed: int = 7,
-) -> DataFrame:
-    """(id, signature:array<long>) via one vectorized pandas pass."""
-    a, b = _perm_params(n_hashes, seed)
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def _sig(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            if t is None:
-                out.append(None)
-                continue
-            sh = (_shingle_hashes(t, shingle_k) % np.uint64(_MERSENNE)).astype(np.int64)
-            # affine permutations: min over shingles per hash function
-            vals = (sh[:, None] * a[None, :] + b[None, :]) % _MERSENNE
-            out.append(vals.min(axis=0).tolist())
-        return pd.Series(out)
-
-    return docs.select(F.col(id_col).alias("doc_id"), _sig(F.col(text_col)).alias("signature"))
 
 
 def shingle_expr(text_col: str, shingle_k: int):
@@ -122,7 +85,7 @@ def shingle_hashes_expr(text_col: str, shingle_k: int, hash_mode: str = "xxhash6
     return F.transform(shingles, lambda s: F.pmod(F.xxhash64(s), F.lit(_MERSENNE)))
 
 
-def minhash_signatures_expr(
+def minhash_signatures(
     docs: DataFrame,
     *,
     text_col: str = "text",
@@ -132,77 +95,17 @@ def minhash_signatures_expr(
     seed: int = 7,
     hash_mode: str = "xxhash64",
 ) -> DataFrame:
-    """MinHash signatures computed fully JVM-side: shingles via
-    higher-order array functions, one hash per shingle, one
-    ``array_min(transform(...))`` per hash function — no Arrow transfer.
-    ``hash_mode='md5'`` makes the signature bit-reproducible in ANSI SQL
-    (oracles.minhash_lsh_sql).
-
-    r08 formulation history (all bit-identical; measured at sf0.1):
-    the r05 "single-pass fold" (aggregate over shingles, zip_with across
-    the 64-entry accumulator per shingle) allocated a fresh 64-array per
-    shingle per doc inside interpreted higher-order lambdas — 5.5 s.
-    Staging the shingle-hash array below a one-row Generate (so
-    CollapseProject cannot inline it into each of the 64 references —
-    the jaccard_verify_expr trick) and taking 64 plain
-    ``array_min(transform(...))`` passes over the MATERIALIZED array is
-    1.7 s. The hybrid (:func:`minhash_signatures_hybrid`, the
-    minhash_dedup default) moves only the (shingles × n_hashes) affine
-    arithmetic to one numpy matmul-shaped pass — 0.6 s."""
-    a, b = _perm_params(n_hashes, seed)
-    hs = shingle_hashes_expr(text_col, shingle_k, hash_mode)
-    staged = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(
-            F.array(
-                F.struct(
-                    hs.alias("hs"), F.col(text_col).isNull().alias("tnull")
-                )
-            )
-        ).alias("__s"),
-    )
-    sig = F.array(
-        *[
-            F.array_min(
-                F.transform(
-                    F.col("__s.hs"),
-                    lambda x: (x * F.lit(int(a[i])) + F.lit(int(b[i])))
-                    % F.lit(_MERSENNE),
-                )
-            )
-            for i in range(n_hashes)
-        ]
-    )
-    # null text → null signature (defined r08 semantics, shared with the
-    # hybrid path; the r05 fold emitted the init array for null text —
-    # an internal intermediate no pipeline outcome depended on, since
-    # null-text docs band together and verify at jaccard 1.0 either way)
-    sig = F.when(F.col("__s.tnull"), F.lit(None).cast("array<long>")).otherwise(sig)
-    return staged.select("doc_id", sig.alias("signature"))
-
-
-def minhash_signatures_hybrid(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_hashes: int = 64,
-    shingle_k: int = 3,
-    seed: int = 7,
-    hash_mode: str = "xxhash64",
-) -> DataFrame:
-    """MinHash signatures with JVM shingle hashing + ONE vectorized numpy
-    pass for the affine mins (guide §4.2: batch arithmetic belongs in
-    native code, not interpreted expression lambdas). The shingle-hash
-    arrays (the only input-size-dependent text work: regex split + md5/
-    xxhash64 per shingle) stay whole-stage-codegen JVM; what crosses
-    Arrow is ~8 bytes per shingle, and the (shingles × n_hashes) affine
-    minimum is one ``(sh[:,None]*a + b) % p .min(0)`` per doc —
-    bit-identical to :func:`minhash_signatures_expr` (exact int64
-    arithmetic both sides: sh, a < 2^31 keeps products < 2^62;
-    equality pytest-asserted, and the md5 family is driver-verified
-    through the dedup_minhash_lsh oracle). ~10x the r05 fold, ~3x the
-    staged expression form at sf0.1."""
+    """(doc_id, signature:array<long>): JVM shingle hashing + ONE
+    vectorized numpy pass for the affine mins (guide §4.2: batch
+    arithmetic belongs in native code, not interpreted expression
+    lambdas). The shingle-hash arrays (the only input-size-dependent
+    text work: regex split + md5/xxhash64 per shingle) stay
+    whole-stage-codegen JVM; what crosses Arrow is ~8 bytes per
+    shingle, and the (shingles × n_hashes) affine minimum is one
+    ``(sh[:,None]*a + b) % p .min(0)`` per doc — exact int64 arithmetic
+    (sh, a < 2^31 keeps products < 2^62). ``hash_mode='md5'`` is
+    reproduced bit for bit by the DuckDB oracle (oracles.minhash_lsh_sql).
+    Null text → null signature."""
     a, b = _perm_params(n_hashes, seed)
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
@@ -210,8 +113,7 @@ def minhash_signatures_hybrid(
         out = []
         for arr in hs:
             # null text reaches here as a null array or a [null] element
-            # (md5/xxhash of the null join) → null signature, matching
-            # minhash_signatures_expr's defined r08 semantics
+            # (md5/xxhash of the null join) → null signature
             if arr is None or pd.isna(arr).any():
                 out.append(None)
                 continue
@@ -312,40 +214,6 @@ def _pair_array(members):
     )
 
 
-def jaccard_verify(
-    pairs: DataFrame,
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_k: int = 3,
-    threshold: float = 0.7,
-) -> DataFrame:
-    """Exact shingle-Jaccard on candidate pairs (joins texts in, one
-    vectorized pandas pass per Arrow batch)."""
-    d = docs.select(F.col(id_col), F.col(text_col))
-    joined = (
-        pairs.join(d.withColumnsRenamed({id_col: "a", text_col: "text_a"}), on="a")
-        .join(d.withColumnsRenamed({id_col: "b", text_col: "text_b"}), on="b")
-    )
-
-    @F.pandas_udf(T.DoubleType())
-    def _jac(ta: pd.Series, tb: pd.Series) -> pd.Series:
-        out = np.empty(len(ta))
-        for i in range(len(ta)):
-            sa = set(_shingle_hashes(ta.iloc[i], shingle_k).tolist())
-            sb = set(_shingle_hashes(tb.iloc[i], shingle_k).tolist())
-            u = len(sa | sb)
-            out[i] = (len(sa & sb) / u) if u else 1.0
-        return pd.Series(out)
-
-    return (
-        joined.withColumn("jaccard", _jac(F.col("text_a"), F.col("text_b")))
-        .filter(F.col("jaccard") >= threshold)
-        .select("a", "b", "jaccard")
-    )
-
-
 def jaccard_verify_expr(
     pairs: DataFrame,
     docs: DataFrame,
@@ -419,16 +287,16 @@ def minhash_dedup(
     """Full near-dup pipeline → (a, b, jaccard) verified duplicate pairs.
 
     ``mode``:
-    - 'expr' (default): pure-JVM xxhash64 signatures + JVM exact-Jaccard
-      verify — the at-scale path, whole-stage codegen end to end.
+    - 'expr' (default): xxhash64 signatures + JVM exact-Jaccard verify —
+      the at-scale path.
     - 'md5': same plan shape with the SQL-expressible md5/fold hash
       family — every stage (signatures, banding, candidate pairs, exact
       verify) reproduces bit-identically in DuckDB
       (oracles.minhash_lsh_sql), which is how the driver hash-checks
       this operator.
-    - 'pandas': the Arrow-batched SipHash variant (kept as an
-      independent implementation for cross-checking recall in tests).
     """
+    if mode not in ("expr", "md5"):
+        raise ValueError(f"mode must be expr|md5: {mode}")
     from ..util import spread
 
     # the doc text feeds THREE scans (signatures + both sides of the
@@ -442,24 +310,8 @@ def minhash_dedup(
     docs = spread(docs)
     if reuse:
         docs = docs.cache()
-    if mode == "pandas":
-        sigs = minhash_signatures(
-            docs, text_col=text_col, id_col=id_col, n_hashes=n_hashes,
-            shingle_k=shingle_k, seed=seed,
-        )
-        pairs = lsh_candidate_pairs(
-            sigs, n_bands=n_bands, rows_per_band=n_hashes // n_bands
-        )
-        return jaccard_verify(
-            pairs, docs, text_col=text_col, id_col=id_col,
-            shingle_k=shingle_k, threshold=threshold,
-        )
     hash_mode = "md5" if mode == "md5" else "xxhash64"
-    # hybrid signatures (r08): JVM shingle hashing + one numpy pass for
-    # the affine mins — bit-identical to the pure-expression form
-    # (pytest + driver oracle) at ~10x the r05 fold's speed; see
-    # minhash_signatures_hybrid
-    sigs = minhash_signatures_hybrid(
+    sigs = minhash_signatures(
         docs, text_col=text_col, id_col=id_col, n_hashes=n_hashes,
         shingle_k=shingle_k, seed=seed, hash_mode=hash_mode,
     )
@@ -476,102 +328,6 @@ def minhash_dedup(
 # --- SimHash ---------------------------------------------------------------
 
 
-@F.pandas_udf(T.LongType())
-def simhash64(texts: pd.Series) -> pd.Series:
-    """64-bit SimHash over word tokens — numpy bit matrices, C-level
-    word hashing; the only Python loop is per document."""
-    out = np.zeros(len(texts), dtype=np.int64)
-    weights = np.uint64(1) << np.arange(64, dtype=np.uint64)
-    for i, t in enumerate(texts):
-        if t is None:
-            continue
-        words = np.asarray(t.split(), dtype=object)
-        if len(words) == 0:
-            continue
-        h = pd.util.hash_array(words, hash_key="0123456789123456")  # uint64[n]
-        # bit matrix (n_words × 64): word-hash bits as ±1 votes per position
-        bits = ((h[:, None] >> np.arange(64, dtype=np.uint64)[None, :]) & np.uint64(1)).astype(
-            np.int64
-        )
-        acc = (2 * bits - 1).sum(axis=0)
-        sig = weights[acc > 0].sum(dtype=np.uint64) if (acc > 0).any() else np.uint64(0)
-        out[i] = np.int64(sig.astype(np.int64))
-    return pd.Series(out)
-
-
-def simhash64_hybrid(
-    docs: DataFrame, *, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """64-bit SimHash, xxhash64 family, with JVM word hashing + ONE
-    numpy pass for the bit votes (r08; guide §4.2 — the same move as
-    :func:`minhash_signatures_hybrid`): the JVM computes each doc's word
-    xxhash64 array (codegen), ~8 bytes/word cross Arrow, and the
-    (words × 64) ±1 vote matrix collapses in vectorized numpy.
-    Bit-identical to :func:`simhash64_expr` (pytest-asserted) without
-    its explode → 64-conditional-sum groupBy shuffle — the whole
-    operator becomes one narrow projection."""
-
-    @F.pandas_udf(T.LongType())
-    def _sig(hs: pd.Series) -> pd.Series:
-        out = np.zeros(len(hs), dtype=np.int64)
-        weights = np.uint64(1) << np.arange(64, dtype=np.uint64)
-        for i, arr in enumerate(hs):
-            if arr is None or len(arr) == 0:
-                continue
-            h = np.asarray(arr, dtype=np.int64).astype(np.uint64)
-            bits = (
-                (h[:, None] >> np.arange(64, dtype=np.uint64)[None, :])
-                & np.uint64(1)
-            ).astype(np.int64)
-            acc = (2 * bits - 1).sum(axis=0)
-            sig = (
-                weights[acc > 0].sum(dtype=np.uint64)
-                if (acc > 0).any()
-                else np.uint64(0)
-            )
-            out[i] = np.int64(sig.astype(np.int64))
-        return pd.Series(out)
-
-    words = F.split(F.trim(F.col(text_col)), r"\s+")
-    hs = F.transform(words, lambda w: F.xxhash64(w))
-    # null-text docs drop out, matching simhash64_expr (whose explode
-    # emits no row for them)
-    return docs.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col).alias("doc_id"), _sig(hs).alias("simhash")
-    )
-
-
-def simhash64_expr(
-    docs: DataFrame, *, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """64-bit SimHash computed entirely JVM-side.
-
-    split → explode words → xxhash64 per word → per-doc sum of ±1 votes
-    per bit position (64 conditional sums, map-side partial aggregation)
-    → reassemble the signature. One narrow shuffle on doc_id; no Python,
-    no Arrow transfer. ~10× the r01 pandas-UDF variant on local[32];
-    :func:`simhash64_hybrid` (the simhash_candidates default since r08)
-    computes the identical signature with no shuffle at all.
-    """
-    words = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("w"),
-    ).withColumn("h", F.xxhash64("w"))
-    votes = [
-        F.sum(
-            F.shiftrightunsigned(F.col("h"), b).bitwiseAND(F.lit(1)) * 2 - 1
-        ).alias(f"b{b}")
-        for b in range(64)
-    ]
-    agged = words.groupBy("doc_id").agg(*votes)
-    sig = None
-    for b in range(64):
-        bit = F.when(F.col(f"b{b}") > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
-        term = F.shiftleft(bit, b)
-        sig = term if sig is None else sig.bitwiseOR(term)
-    return agged.select("doc_id", sig.alias("simhash"))
-
-
 def _block_ranges(n_bits: int, n_blocks: int) -> list[tuple[int, int]]:
     """Split ``n_bits`` into ``n_blocks`` contiguous (start, width) ranges
     as evenly as possible (widths differ by at most 1)."""
@@ -584,87 +340,55 @@ def _block_ranges(n_bits: int, n_blocks: int) -> list[tuple[int, int]]:
     return out
 
 
-def simhash_md5_hybrid(
+def simhash_signatures(
     docs: DataFrame,
     *,
     text_col: str = "text",
     id_col: str = "doc_id",
-    n_bits: int = 56,
+    hash_mode: str = "xxhash64",
+    n_bits: int = 64,
 ) -> DataFrame:
-    """SQL-parity SimHash with JVM md5 word hashing + one numpy vote
-    pass (r08; the :func:`simhash64_hybrid` move applied to the md5
-    family): bit-identical to :func:`simhash_md5_expr` — whose
-    interpreted per-word zip_with folds dominated the dedup_simhash
-    driver row — including its null-text → null-signature row. Exact
-    int64 arithmetic only (md5_long < 2^60, n_bits ≤ 60)."""
+    """(doc_id, simhash) over word tokens: the JVM hashes each word
+    (codegen; ~8 bytes/word cross Arrow) and ONE numpy pass per doc
+    collapses the (words × n_bits) ±1 vote matrix — no explode, no
+    shuffle, one narrow projection (guide §4.2, the same split as
+    :func:`minhash_signatures`).
+
+    ``hash_mode``: 'xxhash64' (at-scale default, n_bits ≤ 64) or 'md5'
+    (the SQL-parity family, n_bits ≤ 60 — reproduced bit for bit by
+    oracles.simhash_sql). Only the word-hash expression differs; the
+    vote kernel is exact int64 arithmetic for both (the weights are
+    distinct powers of two, so the sum never carries — bit 63 wraps to
+    the sign bit, which is that bit's two's-complement value).
+
+    Null text: the xxhash64 family DROPS the row (xxhash64 of a null
+    word is the non-null seed hash, so the text column gates it); the
+    md5 family keeps it with a NULL signature."""
 
     @F.pandas_udf(T.LongType())
     def _sig(hs: pd.Series) -> pd.Series:
         out = []
-        weights = np.int64(1) << np.arange(n_bits, dtype=np.int64)
+        shifts = np.arange(n_bits, dtype=np.int64)
+        weights = np.int64(1) << shifts
         for arr in hs:
             if arr is None or pd.isna(arr).any():
                 out.append(None)
                 continue
-            h = np.asarray(arr, dtype=np.int64)
-            bits = (
-                (h[:, None] >> np.arange(n_bits, dtype=np.int64)[None, :])
-                & np.int64(1)
-            )
+            bits = (np.asarray(arr, dtype=np.int64)[:, None] >> shifts) & 1
             acc = (2 * bits - 1).sum(axis=0)
             out.append(int(weights[acc > 0].sum()))
         return pd.Series(out, dtype="object")
 
-    from ..functions.parity import md5_long
-
-    n_hex = (n_bits + 3) // 4
     words = F.split(F.trim(F.col(text_col)), r"\s+")
-    hs = F.transform(words, lambda w: md5_long(w, n_hex=n_hex))
+    if hash_mode == "md5":
+        from ..functions.parity import md5_long
+
+        n_hex = (n_bits + 3) // 4
+        hs = F.transform(words, lambda w: md5_long(w, n_hex=n_hex))
+    else:
+        hs = F.transform(words, lambda w: F.xxhash64(w))
+        docs = docs.filter(F.col(text_col).isNotNull())
     return docs.select(F.col(id_col).alias("doc_id"), _sig(hs).alias("simhash"))
-
-
-def simhash_md5_expr(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_bits: int = 56,
-) -> DataFrame:
-    """SimHash with the SQL-parity hash family (md5 word hashes, ≤60
-    bits): per-row higher-order expressions only — each bit's ±1 vote is
-    one ``aggregate`` over the word-hash array, no explode, no shuffle.
-    Bit-reproducible in DuckDB (oracles.simhash_sql);
-    :func:`simhash_md5_hybrid` computes the identical signature with the
-    vote matrix in numpy (the simhash_candidates md5 default since r08)."""
-    from ..functions.parity import md5_long
-
-    n_hex = (n_bits + 3) // 4
-    words = F.split(F.trim(F.col(text_col)), r"\s+")
-    hs = F.transform(words, lambda w: md5_long(w, n_hex=n_hex))
-    powers = F.array(*[F.lit(1 << j).cast("long") for j in range(n_bits)])
-    # Single fold over the word hashes: ONE md5 per word, all n_bits ±1
-    # votes updated together (the per-bit-aggregate formulation
-    # recomputes md5 per bit after projection collapse — ~n_bits× work).
-    votes = F.aggregate(
-        hs,
-        F.array(*[F.lit(0).cast("long")] * n_bits),
-        lambda acc, x: F.zip_with(
-            powers,
-            acc,
-            lambda p, v: v
-            + F.when(x.bitwiseAND(p) != 0, F.lit(1)).otherwise(F.lit(-1)),
-        ),
-    )
-    sig = F.aggregate(
-        F.zip_with(
-            powers,
-            votes,
-            lambda p, v: F.when(v > 0, p).otherwise(F.lit(0).cast("long")),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    return docs.select(F.col(id_col).alias("doc_id"), sig.alias("simhash"))
 
 
 def simhash_candidates(
@@ -674,7 +398,6 @@ def simhash_candidates(
     id_col: str = "doc_id",
     max_hamming: int = 3,
     n_blocks: int | None = None,
-    use_expr: bool = True,
     hash_mode: str = "xxhash64",
     n_bits: int = 64,
     reuse: bool = False,
@@ -685,9 +408,9 @@ def simhash_candidates(
 
     ``n_blocks`` defaults to ``max_hamming + 1`` so the pigeonhole recall
     guarantee always holds; passing a smaller value is an error (it would
-    silently miss pairs). ``hash_mode='md5'`` uses the SQL-parity
-    signature (n_bits ≤ 60) so the full candidate set reproduces in
-    DuckDB."""
+    silently miss pairs). ``hash_mode``/``n_bits`` select the signature
+    (:func:`simhash_signatures`); 'md5' with n_bits ≤ 60 makes the full
+    candidate set reproduce in DuckDB (oracles.simhash_sql)."""
     if n_blocks is None:
         n_blocks = max_hamming + 1
     if n_blocks < max_hamming + 1:
@@ -698,20 +421,9 @@ def simhash_candidates(
     from ..util import spread
 
     docs = spread(docs)
-    if hash_mode == "md5":
-        sh = simhash_md5_hybrid(
-            docs, text_col=text_col, id_col=id_col, n_bits=n_bits
-        )
-    elif use_expr:
-        n_bits = 64
-        # hybrid (r08): identical signatures to simhash64_expr with no
-        # explode/groupBy shuffle — see simhash64_hybrid
-        sh = simhash64_hybrid(docs, text_col=text_col, id_col=id_col)
-    else:
-        n_bits = 64
-        sh = docs.select(
-            F.col(id_col).alias("doc_id"), simhash64(F.col(text_col)).alias("simhash")
-        )
+    sh = simhash_signatures(
+        docs, text_col=text_col, id_col=id_col, hash_mode=hash_mode, n_bits=n_bits
+    )
     # the block self-join's two sides would otherwise EACH re-execute the
     # whole signature plan (the per-word hash fold dominates this
     # operator); the signature table is (id, long) — cache it

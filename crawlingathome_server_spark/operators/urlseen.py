@@ -10,7 +10,8 @@ structure instead:
   variant, whose false positives the DuckDB oracle predicts exactly);
   per-bucket bitmap built with ``applyInPandas`` (Arrow batches, numpy
   bit-ops — no per-row Python); sized by ``auto_params`` from a count
-  estimate; bitmaps OR-merge incrementally across crawl rounds;
+  estimate; each crawl round inserts its new urls into only the
+  buckets they touch (:func:`insert_into_bloom`);
 - probe: candidates join their bucket's bitmap (bucketed equi-join; the
   bitmap table is ``n_buckets`` rows → broadcast at any scale, since
   n_buckets*bytes_per_bucket is the total filter size, sized to executor
@@ -108,31 +109,6 @@ def build_seen_filter_auto(
     return flt, params
 
 
-def merge_seen_filters(a: DataFrame, b: DataFrame) -> DataFrame:
-    """OR-merge two bucketed filters built with IDENTICAL params.
-
-    Bloom bitmaps are unions under bitwise OR, so incremental crawl
-    rounds extend the seen-set without touching the raw URL list: build
-    a small filter over the round's new URLs and OR it into the
-    persisted one. One groupBy per merge; each bucket's bitmaps cross
-    into Python once (numpy OR), never per row."""
-
-    def _or(pdf: pd.DataFrame) -> pd.DataFrame:
-        acc: np.ndarray | None = None
-        for blob in pdf["bitmap"]:
-            arr = np.frombuffer(blob, dtype=np.uint8)
-            acc = arr.copy() if acc is None else np.bitwise_or(acc, arr)
-        return pd.DataFrame(
-            {
-                "bucket": [int(pdf["bucket"].iloc[0])],
-                "bitmap": [acc.tobytes()],
-                "n_items": [int(pdf["n_items"].sum())],
-            }
-        )
-
-    return a.unionByName(b).groupBy("bucket").applyInPandas(_or, _BITMAP_SCHEMA)
-
-
 def insert_into_bloom(
     seen_filter: DataFrame,
     new_hashed: DataFrame,
@@ -144,14 +120,12 @@ def insert_into_bloom(
 ) -> DataFrame:
     """Touched-bucket bloom insert in ONE cogroup pass (r08).
 
-    Bit-identical to the two-pass composition ``merge_seen_filters(
-    parent buckets touched by the batch, build_seen_filter(batch))``
-    (pytest-asserted), which paid two shuffles and two grouped-pandas
-    passes per crawl round — one to build the delta filter, one to OR it
-    into the parent's touched buckets. Here the new urls shuffle to
-    their bucket once and meet the parent bitmap in a single cogroup:
-    set the k bit positions straight into a copy of the parent bytes
-    (zeros when the bucket had no row yet). Returns ONLY buckets that
+    Each returned bucket equals :func:`build_seen_filter` over the
+    bucket's parent keys plus the batch (bloom bitmaps are unions under
+    bitwise OR; pytest-asserted). The new urls shuffle to their bucket
+    once and meet the parent bitmap in a single cogroup, which sets the
+    k bit positions straight into a copy of the parent bytes (zeros
+    when the bucket had no row yet). Returns ONLY buckets that
     received >= 1 new url — the Append delta-commit shape, like
     :func:`insert_into_cuckoo` with ``touched_only=True``."""
     m_bits, kk = bits_per_bucket, k
@@ -195,29 +169,6 @@ def insert_into_bloom(
 
 
 FILTER_TABLE = "urlseen_filter"
-
-
-def persist_seen_filter(store, tables: dict, flt: DataFrame, params: dict[str, int],
-                        *, seed: int, round_epoch: int, counters: dict | None = None) -> int:
-    """Commit the built filter alongside the round's tables so the next
-    round PROBES instead of rebuilding (reference analogue: the
-    pending/closed flags persist in Postgres across requests,
-    models.py:31-32). The sizing params ride in the manifest counters."""
-    all_tables = dict(tables)
-    all_tables[FILTER_TABLE] = flt
-    return store.commit(
-        all_tables,
-        seed=seed,
-        round_epoch=round_epoch,
-        counters={**(counters or {}), "urlseen_params": params},
-    )
-
-
-def load_seen_filter(store, spark, snap_id: int | None = None) -> tuple[DataFrame, dict[str, int]]:
-    """Read back (filter_df, params) committed by :func:`persist_seen_filter`."""
-    sid = snap_id if snap_id is not None else store.latest_snapshot_id()
-    params = store.read_manifest(sid)["counters"]["urlseen_params"]
-    return store.read(spark, FILTER_TABLE, sid), params
 
 
 def _positions(h: np.ndarray, m_bits: int, k: int) -> np.ndarray:

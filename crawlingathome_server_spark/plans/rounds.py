@@ -213,9 +213,10 @@ def expand_frontier(
     )
 
     if seen_filter is not None:
-        # a PREBUILT filter (e.g. loaded from the checkpoint store via
-        # urlseen.load_seen_filter) — round k+1 probes what round k
-        # committed instead of rebuilding from the full seen set.
+        # a PREBUILT filter (e.g. the urlseen.FILTER_TABLE the crawl
+        # engine commits, with its params from the manifest counters) —
+        # round k+1 probes what round k committed instead of rebuilding
+        # from the full seen set.
         # params["kind"] selects the structure: bloom (default) or the
         # deletion-capable cuckoo variant.
         flt, params = seen_filter
@@ -258,34 +259,33 @@ def expand_frontier(
     ).withColumn("priority", (F.pmod(F.col("url_hash"), F.lit(1000)) / 1000.0)).withColumn(
         "pending", F.lit(False)
     ).withColumn("closed", F.lit(False)).withColumn("gpu", F.lit(False))
-    # Any claim path EXCEPT the unbounded-literal shortcut consumes the
-    # candidate chain more than once (the count-split's stats/cold/hot
-    # branches, or the classic narrow-rank + payload join-back), and only
-    # the chain's EXCHANGES are deduped by plan reuse — the post-exchange
-    # work (the D1 rank filter and above all the seen-filter cogroup's
-    # Python pass) re-runs per consumer. When the caller hands us a cache
-    # registry (the crawl engine's per-round cache list, released in its
-    # run_round finally), pin the candidate set once instead (r08,
-    # guide §1.2/§5 — measured: the probe cogroup re-execution was the
-    # dominant claim-stage cost in the discovery rounds). Library/bench
-    # callers that pass no registry get the uncached plan, unchanged.
-    multi_consumer = (
-        budget_attached
-        or robots is not None
-        or default_budget < claim_op.UNBOUNDED_BUDGET
-    )
-    if round_caches is not None and multi_consumer:
+    claim_robots = None if budget_attached else robots
+    claim_budget_col = "max_claims_per_round" if budget_attached else None
+    # Any claim path EXCEPT the single-scan shortcut consumes the
+    # candidate chain more than once (the narrow rank + payload
+    # join-back), and only the chain's EXCHANGES are deduped by plan
+    # reuse — the post-exchange work (the D1 rank filter and above all
+    # the seen-filter cogroup's Python pass) re-runs per consumer. When
+    # the caller hands us a cache registry (the crawl engine's per-round
+    # cache list, released in its run_round finally), pin the candidate
+    # set once instead (r08, guide §1.2/§5 — measured: the probe cogroup
+    # re-execution was the dominant claim-stage cost in the discovery
+    # rounds). Library/bench callers that pass no registry get the
+    # uncached plan, unchanged.
+    if round_caches is not None and not claim_op.claim_is_single_scan(
+        claim_robots, claim_budget_col, default_budget
+    ):
         cand = cand.cache()
         round_caches.append(cand)
     claimed = claim_op.claim_batch(
         cand,
-        None if budget_attached else robots,
+        claim_robots,
         seed=seed,
         stage="cpu",
         default_budget=default_budget,
         salt_buckets=salt_buckets,
         robots_broadcast=robots_broadcast,
-        budget_col="max_claims_per_round" if budget_attached else None,
+        budget_col=claim_budget_col,
     )
     return claimed.select(
         "url", "canon_url", "host", "url_hash", "priority", "order_key", "budget"
@@ -1531,19 +1531,18 @@ class RoundEngine:
         (main.py:627-697), then reaper (main.py:748-759), then claims
         (main.py:533-598), then leaderboard/stats (E3).
 
-        ``frontier_commit`` (r04, VERDICT r03 item #3). The first two
-        modes recompute the round's updated frontier ROWS from a
-        point-read of just the touched buckets (store.read_buckets + the
-        same transition chain) — the commit never re-executes the
-        transition plan over the whole frontier — and maintain the
-        dashboard stats incrementally from the touched-row before/after
-        deltas. When the store carries the :attr:`OPEN_SIDECAR` table
-        (default since r05) they also CLAIM from it instead of scanning
+        ``frontier_commit`` (r04, VERDICT r03 item #3). ``"patch"``
+        recomputes the round's updated frontier ROWS from a point-read
+        of just the touched buckets (store.read_buckets + the same
+        transition chain) — the commit never re-executes the transition
+        plan over the whole frontier — and maintains the dashboard stats
+        incrementally from the touched-row before/after deltas. When the store carries the :attr:`OPEN_SIDECAR` table
+        (default since r05) it also CLAIMS from it instead of scanning
         the frontier: the politeness rank reads O(open set) rows — at
         10^10 urls with 1% open, 100× less than the table — closing the
         last O(frontier) pass per round (VERDICT r04 missing #1); claim
         output is pytest-asserted identical to the full-scan path. The
-        modes differ in how the updated rows are committed:
+        two modes:
           - ``"patch"`` (default): merge-on-read layer (checkpoint.Patch)
             — the commit WRITES only the updated rows, so beyond the
             (semantically required, narrow-projection) claim scan the
@@ -1553,18 +1552,15 @@ class RoundEngine:
             realistically-sized store, so "rewrite only touched buckets"
             degenerates to a full rewrite. Layer chains fold at the
             store's patch_layers_max (amortized O(1)).
-          - ``"append"``: bucket-granular checkpoint.Append — rewrites
-            every touched bucket from the parent's dirs. Right shape when
-            rounds touch FEW buckets (small batches / clustered keys);
-            kept for that regime and as a second equivalence oracle.
           - ``"rewrite"``: the pre-r04 key-delta path (full transition
-            plan executed, changed buckets filtered out of it) — the
-            equivalence oracle (tests assert all paths commit identical
+            plan executed, changed buckets filtered out of it; live
+            layers force a full rewrite that folds them) — the
+            equivalence oracle (tests assert both modes commit identical
             state).
         """
-        if frontier_commit not in ("patch", "append", "rewrite"):
+        if frontier_commit not in ("patch", "rewrite"):
             raise ValueError(
-                f"frontier_commit must be patch|append|rewrite: {frontier_commit}"
+                f"frontier_commit must be patch|rewrite: {frontier_commit}"
             )
         spark, seed = self.spark, self.seed
         parent_manifest = self.store.read_manifest(self.store.latest_snapshot_id())
@@ -1572,9 +1568,10 @@ class RoundEngine:
         # open-set-pruned claim scan (r05): when the sidecar exists, the
         # claim ranks over it — O(open) — instead of scanning the whole
         # frontier; the rewrite mode keeps the full-scan path as the
-        # equivalence oracle (the 3-mode test proves identical claims)
+        # equivalence oracle (the patch≡rewrite test proves identical
+        # claims)
         sidecar_in_parent = self.OPEN_SIDECAR in parent_manifest["tables"]
-        use_sidecar = sidecar_in_parent and frontier_commit in ("patch", "append")
+        use_sidecar = sidecar_in_parent and frontier_commit == "patch"
         frontier = self.store.read(spark, "frontier")
         workers = self.store.read(spark, "workers")
         leaderboard = self.store.read(spark, "leaderboard")
@@ -1699,8 +1696,8 @@ class RoundEngine:
             touched = touched.unionByName(completions.select("number"))
         touched = touched.dropDuplicates(["number"])
 
-        sub_before = sub_after = rewrite_cached = None
-        if frontier_commit in ("patch", "append"):
+        sub_before = sub_after = None
+        if frontier_commit == "patch":
             # Point-read the touched buckets, restrict to the touched
             # keys, and re-apply the SAME per-key transition chain — the
             # merges only alter rows matching their delta keys, so the
@@ -1710,24 +1707,14 @@ class RoundEngine:
             # touch the mutable state columns, so the point-read prunes
             # to (number + state) at the parquet scan — the immutable
             # url/host payload never rides the commit path — and the
-            # layer write carries only those columns.
-            from ..sources.checkpoint import Append, Patch
+            # layer write carries only those columns. host/priority ride
+            # along only when the sidecar needs them for open_after.
+            from ..sources.checkpoint import Patch
 
-            # patch mode prunes the point-read to key + state columns —
-            # host/priority ride along only when the sidecar needs them
-            # for open_after (still narrow; the wide url payload never
-            # rides the commit path either way)
             narrow = (
-                (
-                    (
-                        "number", "host", "priority", "host_key",
-                        *self.FRONTIER_STATE_COLS,
-                    )
-                    if use_sidecar
-                    else ("number", *self.FRONTIER_STATE_COLS)
-                )
-                if frontier_commit == "patch"
-                else None
+                ("number", "host", "priority", "host_key", *self.FRONTIER_STATE_COLS)
+                if use_sidecar
+                else ("number", *self.FRONTIER_STATE_COLS)
             )
             # claims-only rounds (no completions/heartbeats/reaping — the
             # steady scheduling regime) change exactly n_claims rows from
@@ -1756,21 +1743,9 @@ class RoundEngine:
             sub_after = claim_op.apply_claims(
                 sub_after, claims, round_epoch=round_epoch
             ).cache()
-            # mode switching (r05): Append is bucket-granular and cannot
-            # see live merge-on-read layers — an append round following
-            # patch rounds FOLDS the frontier instead (full rewrite from
-            # the post-transition plan, layers cleared), same shape the
-            # chain-at-max fold takes
-            frontier_layers = bool(
-                parent_manifest["tables"]["frontier"].get("delta_layers")
-            )
-            deltas: dict = {}
-            if frontier_commit == "patch":
-                deltas["frontier"] = Patch(
-                    sub_after, columns=self.FRONTIER_STATE_COLS
-                )
-            elif not frontier_layers:
-                deltas["frontier"] = Append(sub_after, remove_keys=Append.SAME)
+            deltas: dict = {
+                "frontier": Patch(sub_after, columns=self.FRONTIER_STATE_COLS)
+            }
             if arithmetic_stats:
                 stats_row = self._claims_only_stats(
                     parent_counters, n_claims, stage
@@ -1876,7 +1851,7 @@ class RoundEngine:
         )
         claims.unpersist()
         workers.unpersist()
-        for cached in (sub_before, sub_after, rewrite_cached):
+        for cached in (sub_before, sub_after):
             if cached is not None:
                 cached.unpersist()
         if completions is not None:

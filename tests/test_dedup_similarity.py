@@ -77,11 +77,10 @@ def test_ngram_jaccard_on_candidates(spark, docs):
 
 
 def test_signatures_deterministic_across_partitioning(spark, docs):
-    s1 = {r["doc_id"]: r["signature"] for r in
-          dedup.minhash_signatures(docs.repartition(1)).collect()}
-    s2 = {r["doc_id"]: r["signature"] for r in
-          dedup.minhash_signatures(docs.repartition(7)).collect()}
-    assert s1 == s2
+    for sketch in (dedup.minhash_signatures, dedup.simhash_signatures):
+        s1 = {r[0]: r[1] for r in sketch(docs.repartition(1)).collect()}
+        s2 = {r[0]: r[1] for r in sketch(docs.repartition(7)).collect()}
+        assert s1 == s2
 
 
 # --- similarity ------------------------------------------------------------
@@ -230,10 +229,11 @@ def test_simhash_pigeonhole_completeness(spark, docs):
     """The block-join candidate set must contain EVERY pair with hamming
     ≤ max_hamming (pigeonhole recall contract, r01 verdict item #6):
     compare against brute-force hamming over all signature pairs."""
-    from crawlingathome_server_spark.operators.dedup import simhash_md5_expr
-
     max_h = 7
-    sigs = {r["doc_id"]: r["simhash"] for r in simhash_md5_expr(docs, n_bits=56).collect()}
+    sigs = {
+        r["doc_id"]: r["simhash"]
+        for r in dedup.simhash_signatures(docs, hash_mode="md5", n_bits=56).collect()
+    }
     ids = sorted(sigs)
     want = {
         (a, b)
@@ -351,7 +351,7 @@ def test_minhash_mega_bucket_is_capped(spark):
     rows = [(i, "the same boilerplate text repeated here " * 5) for i in range(400)]
     rows += [(1000 + i, f"unique doc {i} with words w{i} w{i+1} w{i+2} filler") for i in range(50)]
     docs = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
-    sigs = dedup.minhash_signatures_expr(docs)
+    sigs = dedup.minhash_signatures(docs)
     cap = 20
     pairs = dedup.lsh_candidate_pairs(sigs, max_bucket=cap)
     got = pairs.collect()
@@ -404,54 +404,79 @@ def test_line_dedup_drops_boilerplate_keeps_order(spark):
         line_dedup(docs, min_docs=1)
 
 
-def test_minhash_signature_formulations_bit_identical(spark):
-    """r08: the staged-expression and hybrid (numpy affine-min) signature
-    paths must agree value-for-value, null text included."""
-    from pyspark.sql import Row
+#: null, empty, below-shingle-size and whitespace-padded texts included
+_SKETCH_TEXTS = [
+    "the quick brown fox jumps over the lazy dog",
+    "one two",
+    None,
+    "",
+    "  x y z " * 40,
+    "a b c d e f g h i j k l m n o p q r s t u v w",
+]
 
-    docs = spark.createDataFrame(
-        [
-            Row(doc_id=1, text="the quick brown fox jumps over the lazy dog"),
-            Row(doc_id=2, text="one two"),
-            Row(doc_id=3, text=None),
-            Row(doc_id=4, text=""),
-            Row(doc_id=5, text="a b c d e f g h i j k l m n o p q r s t u v w"),
-        ]
+
+@pytest.mark.parametrize("hash_mode", ["xxhash64", "md5"])
+@pytest.mark.parametrize("sketch", ["minhash", "simhash"])
+def test_signatures_match_python_reference(spark, sketch, hash_mode):
+    """The production kernels (numpy pass over JVM hash arrays) equal a
+    plain-Python reference — exact big-int arithmetic — applied to the
+    same hash arrays collected from Spark. Null text gives a null
+    signature, except xxhash64 simhash, which drops the row."""
+    from crawlingathome_server_spark.functions.parity import md5_long
+
+    docs = spark.createDataFrame(list(enumerate(_SKETCH_TEXTS)), "doc_id long, text string")
+    if sketch == "minhash":
+        sigs = dedup.minhash_signatures(docs, hash_mode=hash_mode)
+        hs = dedup.shingle_hashes_expr("text", 3, hash_mode)
+        perms = [(int(a), int(b)) for a, b in zip(*dedup._perm_params(64, 7))]
+
+        def ref(h):
+            return [min((x * a + b) % dedup._MERSENNE for x in h) for a, b in perms]
+
+    else:
+        n_bits = 64 if hash_mode == "xxhash64" else 56
+        sigs = dedup.simhash_signatures(docs, hash_mode=hash_mode, n_bits=n_bits)
+        word_hash = F.xxhash64 if hash_mode == "xxhash64" else (lambda w: md5_long(w, n_hex=14))
+        hs = F.transform(F.split(F.trim("text"), r"\s+"), lambda w: word_hash(w))
+
+        def ref(h):
+            votes = [sum(1 if (x >> j) & 1 else -1 for x in h) for j in range(n_bits)]
+            sig = sum(1 << j for j, v in enumerate(votes) if v > 0)
+            return sig - (1 << 64) if sig >> 63 else sig
+
+    got = {r[0]: r[1] for r in sigs.collect()}
+    want = {
+        r["doc_id"]: None if r["text"] is None else ref(r["hs"])
+        for r in docs.select("doc_id", "text", hs.alias("hs")).collect()
+    }
+    if sketch == "simhash" and hash_mode == "xxhash64":
+        del want[2]
+    assert got == want
+
+
+def test_md5_pipelines_match_duckdb_oracle(spark, docs):
+    """The md5 minhash and simhash pipelines (signatures, banding or
+    blocks, candidate join, verify) equal their DuckDB oracle SQL as
+    sets on the planted-duplicate corpus."""
+    import duckdb
+
+    from crawlingathome_server_spark import oracles
+
+    con = duckdb.connect()
+    con.register("documents", docs.toPandas())
+    got = {
+        (r["a"], r["b"], round(r["jaccard"], 12))
+        for r in dedup.minhash_dedup(docs, threshold=0.5, mode="md5").collect()
+    }
+    want = {(a, b, round(j, 12)) for a, b, j in con.execute(oracles.minhash_lsh_sql()).fetchall()}
+    assert got == want and got
+    got = set(
+        map(
+            tuple,
+            dedup.simhash_candidates(docs, hash_mode="md5", n_bits=56, max_hamming=7)
+            .select("a", "b", "hamming")
+            .collect(),
+        )
     )
-    for hash_mode in ("md5", "xxhash64"):
-        a = {
-            r["doc_id"]: r["signature"]
-            for r in dedup.minhash_signatures_expr(docs, hash_mode=hash_mode).collect()
-        }
-        b = {
-            r["doc_id"]: r["signature"]
-            for r in dedup.minhash_signatures_hybrid(docs, hash_mode=hash_mode).collect()
-        }
-        assert a == b, hash_mode
-        assert a[3] is None
-
-
-def test_simhash_hybrid_equals_expr(spark):
-    """r08: the numpy-vote simhash signature must equal the JVM
-    explode+conditional-sum formulation doc-for-doc (null text drops)."""
-    from pyspark.sql import Row
-
-    rows = [Row(doc_id=i, text=t) for i, t in enumerate(
-        ["the quick brown fox", "", "a", None, "x y z " * 40, "one two one two"]
-    )]
-    docs = spark.createDataFrame(rows)
-    a = {r["doc_id"]: r["simhash"] for r in dedup.simhash64_expr(docs).collect()}
-    b = {r["doc_id"]: r["simhash"] for r in dedup.simhash64_hybrid(docs).collect()}
-    assert a == b and 3 not in a
-
-
-def test_simhash_md5_hybrid_equals_expr(spark):
-    """r08: numpy-vote md5 simhash == expression fold, nulls included."""
-    from pyspark.sql import Row
-
-    docs = spark.createDataFrame([Row(doc_id=i, text=t) for i, t in enumerate(
-        ["the quick brown fox", "", "a", None, "w x y z " * 30]
-    )])
-    a = {r["doc_id"]: r["simhash"] for r in dedup.simhash_md5_expr(docs, n_bits=56).collect()}
-    b = {r["doc_id"]: r["simhash"] for r in dedup.simhash_md5_hybrid(docs, n_bits=56).collect()}
-    assert a == b and a[3] is None
+    want = set(con.execute(oracles.simhash_sql(n_bits=56, max_hamming=7)).fetchall())
+    assert got == want and got

@@ -65,7 +65,7 @@ def test_minhash_signature_fuzz_parity(spark):
     from crawlingathome_server_spark.operators.dedup import (
         _MERSENNE,
         _perm_params,
-        minhash_signatures_expr,
+        minhash_signatures,
     )
     from crawlingathome_server_spark.oracles import shingles_sql
 
@@ -78,7 +78,7 @@ def test_minhash_signature_fuzz_parity(spark):
     sdf = spark.createDataFrame(pdf)
     got = {
         r["doc_id"]: r["signature"]
-        for r in minhash_signatures_expr(sdf, hash_mode="md5").collect()
+        for r in minhash_signatures(sdf, hash_mode="md5").collect()
     }
     a, b = _perm_params(64, 7)
     mins = ", ".join(

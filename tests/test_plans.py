@@ -133,7 +133,7 @@ def test_lsh_pipelines_have_no_cartesian_and_cap_buckets(spark):
     from crawlingathome_server_spark.operators import dedup
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    sigs = dedup.minhash_signatures_expr(docs)
+    sigs = dedup.minhash_signatures(docs)
     p = plan_of(dedup.lsh_candidate_pairs(sigs))
     assert "WindowGroupLimit" in p, p
 

@@ -76,12 +76,11 @@ def test_resume_equals_uninterrupted(spark, tmp_path):
     assert state(store_a) == state(store_b)
 
 
-def test_frontier_append_commit_equals_rewrite(spark, tmp_path):
-    """r04 O(delta) frontier commits: the Patch (merge-on-read) and
-    Append (bucket-delta) paths — touched-bucket point-read + subset
-    transition re-apply + incremental stats — commit state identical to
-    the pre-r04 full-plan rewrite path, round by round, with completions,
-    reaping, and claims all in play."""
+def test_frontier_patch_commit_equals_rewrite(spark, tmp_path):
+    """r04 O(delta) frontier commits: the Patch (merge-on-read) path —
+    touched-bucket point-read + subset transition re-apply + incremental
+    stats — commits state identical to the full-plan rewrite path,
+    round by round, with completions, reaping, and claims all in play."""
     rb = datagen.robots(spark)
 
     def drive(mode, root):
@@ -116,11 +115,8 @@ def test_frontier_append_commit_equals_rewrite(spark, tmp_path):
 
     rows_a, stats_a, store_a = drive("patch", "pt")
     rows_b, stats_b, _ = drive("rewrite", "rw")
-    rows_c, stats_c, _ = drive("append", "ap")
     assert rows_a == rows_b
     assert stats_a == stats_b
-    assert rows_c == rows_b
-    assert stats_c == stats_b
 
     # patch commits never rewrite base buckets: every frontier bucket of
     # the last snapshot still carries the bootstrap's written_by, and the
@@ -129,22 +125,6 @@ def test_frontier_append_commit_equals_rewrite(spark, tmp_path):
     meta = store_a.read_manifest(last)["tables"]["frontier"]
     assert all(p["written_by"] == 1 for p in meta["partitions"].values())
     assert len(meta["delta_layers"]) == 3
-
-    # the append commit must inherit untouched buckets (O(delta) shape):
-    # a round claiming ~40 of 400 keys over 64 buckets leaves most
-    # buckets untouched — they must carry the bootstrap's written_by
-    store = CheckpointStore(str(tmp_path / "inherit"), n_partitions=64)
-    eng = RoundEngine(spark, store, seed=5, host_default_budget=1)
-    eng.bootstrap(
-        dedup_by_number(datagen.frontier(spark, n=400)),
-        datagen.workers(spark),
-        round_epoch=0,
-    )
-    eng.run_round(round_epoch=1, frontier_commit="append")
-    last = store.latest_snapshot_id()
-    parts = store.read_manifest(last)["tables"]["frontier"]["partitions"]
-    inherited = sum(1 for p in parts.values() if p["written_by"] < last)
-    assert inherited >= 16, parts
 
 
 def test_claim_sequence_matches_simulator(spark, tmp_path):
@@ -320,10 +300,11 @@ def test_two_stage_cpu_gpu_lifecycle(spark, tmp_path):
 
 
 def test_frontier_commit_mode_switching(spark, tmp_path):
-    """r05: switching commit modes mid-crawl must work — append/rewrite
-    rounds after patch rounds FOLD the frontier (bucket-granular deltas
-    cannot see live MOR layers) and the resulting state matches an
-    all-rewrite drive of the same round sequence."""
+    """r05: switching commit modes mid-crawl must work — a rewrite round
+    after patch rounds FOLDS the frontier (bucket-granular deltas cannot
+    see live MOR layers), patch rounds stack on the folded base, and the
+    resulting state matches an all-rewrite drive of the same round
+    sequence. A removed mode name is refused."""
     def drive(modes, root):
         store = CheckpointStore(str(tmp_path / root), n_partitions=8)
         eng = RoundEngine(spark, store, seed=7)
@@ -336,23 +317,23 @@ def test_frontier_commit_mode_switching(spark, tmp_path):
             eng.run_round(round_epoch=ep, frontier_commit=mode)
         return store
 
-    seq = ("patch", "append", "rewrite", "patch", "patch")
+    seq = ("patch", "rewrite", "patch", "patch")
     store_m = drive(seq, "mixed")
     store_r = drive(("rewrite",) * len(seq), "allrw")
     got = sorted(map(tuple, store_m.read(spark, "frontier").collect()))
     want = sorted(map(tuple, store_r.read(spark, "frontier").collect()))
     assert got == want
-    # the fold actually happened: after round 2 (append-after-patch) the
-    # frontier chain was cleared, and the final two patch rounds stack
-    # on the folded base
+    # the fold actually happened: bootstrap=snap1; round k=snap k+1: the
+    # patch round stacked a layer, the rewrite round folded it, and the
+    # final two patch rounds stacked two on the folded base
     lineage = {m["snapshot_id"]: m for m in store_m.lineage()}
-    # bootstrap=snap1; round k=snap k+1: patch round stacked a layer,
-    # the append round folded it, rewrite stayed flat, final patches
-    # stacked two on the folded base
     assert len(lineage[2]["tables"]["frontier"]["delta_layers"]) == 1
     assert lineage[3]["tables"]["frontier"]["delta_layers"] == []
-    assert lineage[4]["tables"]["frontier"]["delta_layers"] == []
-    assert len(lineage[6]["tables"]["frontier"]["delta_layers"]) == 2
+    assert len(lineage[5]["tables"]["frontier"]["delta_layers"]) == 2
+    with pytest.raises(ValueError):
+        RoundEngine(spark, store_m, seed=7).run_round(
+            round_epoch=len(seq) + 1, frontier_commit="append"
+        )
     # sidecar stayed consistent throughout
     sc = sorted(map(tuple, store_m.read(spark, RoundEngine.OPEN_SIDECAR).collect()))
     open_want = sorted(
@@ -1344,10 +1325,15 @@ def test_crawl_rounds_with_persisted_filter(spark, tmp_path):
     out1 = expand_frontier(pages1, None, seed=5, default_budget=1 << 20)
     claimed1 = out1.select("canon_url")
     flt, params = urlseen.build_seen_filter_auto(urlseen.hash_urls(claimed1))
-    urlseen.persist_seen_filter(store, {}, flt, params, seed=5, round_epoch=1)
+    store.commit(
+        {urlseen.FILTER_TABLE: flt}, seed=5, round_epoch=1,
+        counters={"urlseen_params": params},
+    )
 
     # round 2: half old pages, half new — from a fresh store read
-    flt2, params2 = urlseen.load_seen_filter(store, spark)
+    snap = store.latest_snapshot_id()
+    params2 = store.read_manifest(snap)["counters"]["urlseen_params"]
+    flt2 = store.read(spark, urlseen.FILTER_TABLE, snap)
     pages2 = datagen.pages(spark, seed=31, n=400).unionByName(
         datagen.pages(spark, seed=77, n=200)
     )
@@ -1358,23 +1344,6 @@ def test_crawl_rounds_with_persisted_filter(spark, tmp_path):
     round2 = {r["canon_url"] for r in out2.select("canon_url").collect()}
     assert not round1 & round2  # bloom has no false negatives
     assert round2  # the new pages did get scheduled (modulo rare FPs)
-
-
-def test_merge_seen_filters_equals_bulk_build(spark):
-    """Bloom bitmaps are unions: OR-merging two filters must equal the
-    filter built over the union of their key sets (same params)."""
-    from crawlingathome_server_spark.operators import urlseen
-
-    a = spark.range(0, 3000).select(F.concat(F.lit("http://m/"), "id").alias("canon_url"))
-    b = spark.range(2000, 5000).select(F.concat(F.lit("http://m/"), "id").alias("canon_url"))
-    kw = {"n_buckets": 32, "bits_per_bucket": 1 << 14, "k": 5}
-    fa = urlseen.build_seen_filter(urlseen.hash_urls(a), **kw)
-    fb = urlseen.build_seen_filter(urlseen.hash_urls(b), **kw)
-    merged = {r["bucket"]: bytes(r["bitmap"]) for r in
-              urlseen.merge_seen_filters(fa, fb).collect()}
-    bulk = {r["bucket"]: bytes(r["bitmap"]) for r in
-            urlseen.build_seen_filter(urlseen.hash_urls(a.unionByName(b)), **kw).collect()}
-    assert merged == bulk
 
 
 def _crawl_pages(spark, r, n=300):

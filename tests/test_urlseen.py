@@ -100,9 +100,10 @@ def test_auto_sized_filter_fpr(spark):
 
 
 def test_filter_persists_across_rounds(spark, tmp_path):
-    """Round k commits the built filter through CheckpointStore; round
-    k+1 loads it (params from the manifest) and probes WITHOUT
-    rebuilding — the crawl's cross-round once-only guarantee."""
+    """Round k commits the built filter as FILTER_TABLE with its params
+    in the manifest counters (the crawl engine's layout); round k+1
+    reads both back and probes WITHOUT rebuilding — the crawl's
+    cross-round once-only guarantee."""
     from crawlingathome_server_spark.sources.checkpoint import CheckpointStore
 
     store = CheckpointStore(str(tmp_path / "st"), n_partitions=4)
@@ -110,12 +111,15 @@ def test_filter_persists_across_rounds(spark, tmp_path):
         F.concat(F.lit("http://r.example.org/p/"), F.col("id")).alias("canon_url")
     )
     flt, params = urlseen.build_seen_filter_auto(urlseen.hash_urls(seen_k))
-    urlseen.persist_seen_filter(
-        store, {}, flt, params, seed=1, round_epoch=100
+    store.commit(
+        {urlseen.FILTER_TABLE: flt}, seed=1, round_epoch=100,
+        counters={"urlseen_params": params},
     )
 
     # --- next round: fresh read from disk ---
-    flt2, params2 = urlseen.load_seen_filter(store, spark)
+    snap = store.latest_snapshot_id()
+    params2 = store.read_manifest(snap)["counters"]["urlseen_params"]
+    flt2 = store.read(spark, urlseen.FILTER_TABLE, snap)
     assert params2 == params
     cands = spark.range(2500, 7500).select(
         F.concat(F.lit("http://r.example.org/p/"), F.col("id")).alias("canon_url")
@@ -277,9 +281,12 @@ def test_auto_cuckoo_params_bucket_size_posture():
 
 
 def test_insert_into_bloom_equals_build_plus_merge(spark):
-    """r08: the one-cogroup bloom insert is bit-identical to the old
-    build-delta + OR-merge composition, including buckets with no parent
-    row and parent-only (untouched) buckets, which it must omit."""
+    """The one-cogroup bloom insert equals building the batch and
+    OR-merging it into the parent's touched buckets — i.e. (bloom
+    bitmaps are unions under OR) a bulk build over parent keys ∪ batch,
+    restricted to the touched buckets: bitmap and n_items bit-identical,
+    buckets with no parent row included, parent-only (untouched) buckets
+    omitted."""
     base_urls = spark.range(0, 3000).select(
         F.concat(F.lit("http://a/"), F.col("id")).alias("canon_url")
     )
@@ -294,11 +301,13 @@ def test_insert_into_bloom_equals_build_plus_merge(spark):
         r["bucket"]: (bytes(r["bitmap"]), r["n_items"])
         for r in urlseen.insert_into_bloom(flt, hashed, **kw).collect()
     }
-    ids = urlseen.touched_buckets(hashed, n_buckets=64)
-    base = flt.join(F.broadcast(ids), on="bucket", how="left_semi")
-    delta = urlseen.build_seen_filter(hashed, **kw)
+    touched = {r["bucket"] for r in urlseen.touched_buckets(hashed, n_buckets=64).collect()}
+    union = urlseen.build_seen_filter(
+        urlseen.hash_urls(base_urls.unionByName(new_urls)), **kw
+    )
     want = {
         r["bucket"]: (bytes(r["bitmap"]), r["n_items"])
-        for r in urlseen.merge_seen_filters(base, delta).collect()
+        for r in union.collect()
+        if r["bucket"] in touched
     }
     assert got == want and 0 < len(got) < 64
