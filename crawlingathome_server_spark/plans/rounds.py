@@ -44,6 +44,16 @@ def _dedup_sitemaps(df: DataFrame) -> DataFrame:
     return df.groupBy("sitemap_url").agg(F.min("host").alias("host"))
 
 
+def _dedup_robots(df: DataFrame) -> DataFrame:
+    """One (host, robots_txt) row per host with a DETERMINISTIC body: a
+    fetched body beats a failed fetch (NULL — ``min`` skips NULLs) and
+    two bodies for one host keep the smaller. ``dropDuplicates`` would
+    keep whichever row comes first, making the politeness dim
+    (crawl-delay → budget), and so the claim, depend on the caller's
+    row order and partitioning."""
+    return df.groupBy("host").agg(F.min("robots_txt").alias("robots_txt"))
+
+
 def expand_frontier(
     pages: DataFrame,
     robots: DataFrame | None,
@@ -487,6 +497,9 @@ class CrawlEngine:
         # so it happens at doubling cadence (amortized O(1) per row),
         # exactly like the bloom-filter capacity rebuild below.
         self.rows_per_bucket = rows_per_bucket
+        # the last successful round's claimed set, pinned as run_round's
+        # return value until the next run_round (one pin per engine)
+        self._fetch_list: DataFrame | None = None
 
     def bootstrap(self, *, round_epoch: int = 0) -> int:
         from pyspark.sql import types as T
@@ -874,7 +887,7 @@ class CrawlEngine:
 
         dim_rows_delta = 0
         if robots_fetched is not None:
-            robots_fetched = robots_fetched.dropDuplicates(["host"]).cache()
+            robots_fetched = _dedup_robots(robots_fetched).cache()
             caches.append(robots_fetched)
             n_robots_fetched = robots_fetched.count()
             fetched_hosts = robots_fetched.select("host")
@@ -1045,9 +1058,11 @@ class CrawlEngine:
             # hosts touch most buckets, so the Append path re-read and
             # rewrote nearly the whole dim/queue tables every discovery
             # round (~6 jobs each); a layer writes only the delta rows +
-            # tombstones. Row totals ride inexact until the chain folds
-            # (rows_delta is unknowable here: a re-fetched host is a
-            # replacement, not an insert) — nothing consumes these
+            # tombstones. The dim layer's rows_delta is exact: ingest
+            # counted fetched − already-present hosts (dim_rows_delta).
+            # The queue layers pass none (their net change would need a
+            # probe of the parent queue), so their row totals ride
+            # inexact until the chain folds; nothing consumes those
             # totals beyond display, and folds restore exactness.
             if disc["new_dim"] is not None:
                 deltas[self.ROBOTS_DIM] = Patch(
@@ -1092,12 +1107,23 @@ class CrawlEngine:
         ``extra_counters`` ride into the manifest (e.g. the streaming
         driver's batch id for exactly-once replay skipping).
 
+        The returned fetch list is the round's own materialized claims
+        (url, canon_url, host, url_hash, priority, order_key, budget),
+        the rows ``n_claimed`` counted and ``seen_urls`` committed. It
+        stays pinned until this engine's next ``run_round``, so reading
+        it costs O(claims) and survives expiry of the parent snapshot.
+        After that it is a lazy plan again: re-reading it then re-runs
+        the round's pipeline over the parent snapshot's files.
+
         ``robots_fetched`` (host, robots_txt) and ``sitemap_fetched``
         (sitemap_url, host, xml) are the caller's fetch results for the
         previous round's worklists (``discovery=True`` only — see the
         class docstring); ingestion happens BEFORE this round's claim,
         so a robots body parsed this round governs this round's
         politeness and a leaf sitemap's urls are claimable this round."""
+        if self._fetch_list is not None:
+            self._fetch_list.unpersist()
+            self._fetch_list = None
         spark, store = self.spark, self.store
         snap = store.latest_snapshot_id()
         parent_manifest = store.read_manifest(snap)
@@ -1136,7 +1162,9 @@ class CrawlEngine:
         expand_caches: list = []
         # every cached df is released in the finally even when the commit
         # aborts (e.g. a failed written-count read) — a long-lived engine
-        # retrying rounds must not accumulate pinned filter/claim copies
+        # retrying rounds must not accumulate pinned filter/claim copies.
+        # The one exception is a successful round's claimed set: it is
+        # the returned fetch list, pinned until the next run_round.
         try:
             if self.ttl_rounds is not None and n_seen:
                 cutoff = round_epoch - self.ttl_rounds
@@ -1384,7 +1412,8 @@ class CrawlEngine:
                     round_epoch=round_epoch,
                     n_partitions=new_parts,
                 )
-            return claimed
+            self._fetch_list, claimed = claimed, None
+            return self._fetch_list
         finally:
             disc_caches = disc["caches"] if disc is not None else []
             for cached in (

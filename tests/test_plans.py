@@ -106,6 +106,50 @@ def test_expand_frontier_is_python_free(spark):
         assert marker not in p_links, marker
 
 
+def _physical_node_names(df) -> list[str]:
+    """Node names of ``df``'s executed plan, looking through adaptive
+    wrappers but not into a cached relation's own (already run) plan."""
+    names, todo = [], [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        names.append(node.nodeName())
+        if node.nodeName() == "AdaptiveSparkPlan":
+            todo.append(node.executedPlan())
+            continue
+        children = node.children()
+        todo.extend(children.apply(i) for i in range(children.size()))
+    return names
+
+
+def test_crawl_fetch_list_is_served_from_round_pin(spark, tmp_path):
+    """The fetch list run_round returns reads the round's materialized
+    claims: no robots-parse Python crossing, claim window or shuffle is
+    left to re-run when the fetcher reads it."""
+    import datetime as dt
+
+    from crawlingathome_server_spark.plans.rounds import CrawlEngine
+    from crawlingathome_server_spark.sources.checkpoint import CheckpointStore
+
+    ts = dt.datetime(2021, 1, 1)
+    store = CheckpointStore(str(tmp_path / "pinplan"), n_partitions=4)
+    eng = CrawlEngine(spark, store, seed=3, discovery=True)
+    eng.bootstrap()
+    pages = spark.createDataFrame(
+        [(f"http://h{i % 3}.example.com/p/{i}", ts) for i in range(30)],
+        schema="url string, warc_ts timestamp",
+    )
+    bodies = spark.createDataFrame(
+        [("h0.example.com", "User-agent: *\nCrawl-delay: 10\n"),
+         ("h1.example.com", None)],
+        schema="host string, robots_txt string",
+    )
+    fl = eng.run_round(pages, round_epoch=1, robots_fetched=bodies)
+    names = _physical_node_names(fl)
+    assert "InMemoryTableScan" in names, names
+    for marker in ("ArrowEvalPython", "BatchEvalPython", "Window", "Exchange"):
+        assert not any(marker in n for n in names), (marker, names)
+
+
 def test_knn_cross_join_is_broadcast_not_cartesian(spark):
     import sys
 
